@@ -29,8 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.keys import upload_id_col
-from ..schemas import MAX_DELIVERY_ATTEMPTS
 from ..sources.csv_source import read_csv_file_metadata
+from .dlq import route_to_dlq
 from .ledger import latest_wins, read_ledger, upsert_append
 
 # Engine validation semantics (documented divergence from the reference's
@@ -39,13 +39,13 @@ from .ledger import latest_wins, read_ledger, upsert_append
 MIN_DATA_ROWS = 1
 
 
-def _file_facts(spark: SparkSession, csv_dir: str) -> DataFrame:
+def _file_facts(lines: DataFrame) -> DataFrame:
     """One row per .csv file: identity tuple + upload_id + line counts."""
-    lines = read_csv_file_metadata(spark, csv_dir)
     # F1: case-insensitive suffix filter (main.py:34-36). Applied before
     # anything else so non-CSV files never reach hashing or counting.
     lines = lines.filter(F.lower(F.col("file_name")).endswith(".csv"))
     per_file = lines.groupBy("bucket_name", "file_name", "file_size", "time_created").agg(
+        # count(*) reads no line values; a 0-byte file's one row -> 0 data rows
         F.count("*").alias("n_lines")
     )
     return per_file.withColumn(
@@ -64,29 +64,20 @@ def terminal_upload_ids(ledger: DataFrame) -> DataFrame:
     (E2 terminal gate — the reference's DLQ retry cap,
     ARCHITECTURE.md:75). Below the cap, failed files re-attempt and a
     success overwrites `failed` with `done` (redelivery semantics,
-    SURVEY §3.2). Shared by the batch and streaming ingest paths."""
+    SURVEY §3.2)."""
     done = latest_wins(ledger).filter(F.col("status") == "done").select("upload_id")
-    exhausted = (
-        ledger.filter(F.col("status") == "failed")
-        .groupBy("upload_id")
-        .agg(F.count("*").alias("__attempts"))
-        .filter(F.col("__attempts") >= MAX_DELIVERY_ATTEMPTS)
-        .select("upload_id")
-    )
+    # Catalyst prunes route_to_dlq's unused aggregates down to its count
+    exhausted = route_to_dlq(ledger).filter("terminal").select("upload_id")
     return done.unionByName(exhausted)
 
 
-def ingest_batch(spark: SparkSession, csv_dir: str, ledger_dir: str) -> DataFrame:
-    """Run one ingest pass; returns the latest-wins ledger view after it.
+def ingest_lines(lines: DataFrame, ledger_dir: str) -> None:
+    """The one write path, batch and streaming alike: per-line file rows
+    (sources.csv_source.file_lines) → per-file facts → gate → transition
+    rows → `upsert_append` onto the ledger."""
+    candidates = _file_facts(lines)
 
-    Idempotent by construction: re-running on the same directory appends
-    nothing (every file's upload_id is already `done` or `failed`-terminal
-    gated by F2 on `done`; failed files are retried, matching the
-    reference's redelivery-overwrites-failed semantics, SURVEY §3.2).
-    """
-    candidates = _file_facts(spark, csv_dir)
-
-    skip = terminal_upload_ids(read_ledger(spark, ledger_dir))
+    skip = terminal_upload_ids(read_ledger(lines.sparkSession, ledger_dir))
     # F2: idempotency gate. The ledger side is tiny relative to the scan
     # at scale — broadcast it so the gate is shuffle-free.
     fresh = candidates.join(F.broadcast(skip), "upload_id", "left_anti")
@@ -110,4 +101,16 @@ def ingest_batch(spark: SparkSession, csv_dir: str, ledger_dir: str) -> DataFram
         now.alias("ts"),
     )
     upsert_append(transitions, ledger_dir)
+
+
+def ingest_batch(spark: SparkSession, csv_dir: str, ledger_dir: str) -> DataFrame:
+    """Run one ingest pass; returns the latest-wins ledger view after it.
+
+    Idempotent by construction: a re-run on the same directory appends
+    nothing for an upload that is `done` (F2) or has reached the retry
+    cap (E2). A failed upload below the cap is re-attempted and gets one
+    more row, so a success overwrites `failed` with `done` — the
+    reference's redelivery semantics (SURVEY §3.2).
+    """
+    ingest_lines(read_csv_file_metadata(spark, csv_dir), ledger_dir)
     return latest_wins(read_ledger(spark, ledger_dir))

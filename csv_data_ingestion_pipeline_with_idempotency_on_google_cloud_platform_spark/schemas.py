@@ -1,29 +1,12 @@
 """Engine schemas, declared up front (the reference's schemas are implicit;
 see SURVEY.md §1 and FIXTURES.md for the derivation, with reference
 citations ``main.py:61-68`` (ledger), ``main.py:74-78`` (queue message),
-``test-data.csv:1`` (CSV input), ``ARCHITECTURE.md:64-79`` (DLQ)).
+``ARCHITECTURE.md:64-79`` (DLQ retry cap)).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# Ingested CSV fixture schema — reference test-data.csv:1
-CSV_INPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("email", T.StringType()),
-        T.StructField("age", T.LongType()),
-        T.StructField("department", T.StringType()),
-    ]
-)
-
-# Same schema with PERMISSIVE corrupt-record capture: malformed rows become
-# data feeding the `failed` path instead of exceptions (SURVEY §1.3).
-CSV_INPUT_SCHEMA_PERMISSIVE = T.StructType(
-    list(CSV_INPUT_SCHEMA.fields) + [T.StructField("_corrupt_record", T.StringType())]
-)
 
 # uploads_ledger — reference Firestore doc schema, ARCHITECTURE.md:86-101.
 # Append-model adds `ts` (transition time) for latest-wins reads.
@@ -44,8 +27,6 @@ LEDGER_SCHEMA = T.StructType(
     ]
 )
 
-VALID_STATUSES = ("pending", "processing", "done", "failed")
-
 # Pub/Sub-equivalent queue message — reference main.py:74-78
 QUEUE_MESSAGE_SCHEMA = T.StructType(
     [
@@ -55,15 +36,4 @@ QUEUE_MESSAGE_SCHEMA = T.StructType(
     ]
 )
 
-# Dead-letter queue — reference ARCHITECTURE.md:64-79; terminal at attempt>=5
-DLQ_SCHEMA = T.StructType(
-    [
-        T.StructField("upload_id", T.StringType(), False),
-        T.StructField("file_name", T.StringType()),
-        T.StructField("error_message", T.StringType()),
-        T.StructField("attempt", T.IntegerType(), False),
-        T.StructField("failed_at", T.TimestampType()),
-    ]
-)
-
-MAX_DELIVERY_ATTEMPTS = 5  # ARCHITECTURE.md:75
+MAX_DELIVERY_ATTEMPTS = 5  # DLQ retry cap, ARCHITECTURE.md:75

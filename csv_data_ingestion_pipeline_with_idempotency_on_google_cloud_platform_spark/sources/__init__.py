@@ -1,11 +1,10 @@
 from .parquet_source import TABLES, load_table, register_views  # noqa: F401
 from .csv_source import (  # noqa: F401
+    file_lines,
     read_csv_dir,
     read_csv_file_metadata,
-    read_csv_stream,
 )
 from .jsonl_source import (  # noqa: F401
     read_jsonl_dir,
-    read_jsonl_stream,
     split_quarantine,
 )

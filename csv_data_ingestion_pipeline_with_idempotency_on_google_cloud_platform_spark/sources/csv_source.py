@@ -12,9 +12,9 @@ re-expression:
   gives (file_name, file_size, file_modification_time) without reading
   row content twice — the reference fetches the same triple via a GCS
   metadata RPC (``main.py:43-47``).
-- event-driven:      ``spark.readStream`` file source (streaming module)
-  natively reproduces "new file appears → gets processed"
-  (``ARCHITECTURE.md:10-16``).
+- event-driven:      ``file_lines`` also projects a ``spark.readStream``
+  text source (streaming.ingest_stream), which reproduces "new file
+  appears → gets processed" (``ARCHITECTURE.md:10-16``).
 
 At 100 TB scale the batch reader splits large CSVs across tasks
 (``spark.sql.files.maxPartitionBytes``) and compacts small files per task
@@ -23,6 +23,9 @@ At 100 TB scale the batch reader splits large CSVs across tasks
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -52,48 +55,55 @@ def read_csv_dir(
     return reader.csv(path)
 
 
+def file_lines(text: DataFrame) -> DataFrame:
+    """Per-line rows of a text-source frame, batch or streaming, each
+    carrying its file's identity: (file_name, file_size, time_created,
+    line, bucket_name) — the triple the reference fetches per blob
+    (main.py:43-47) comes from Spark's `_metadata` hidden column, so the
+    file is listed, not parsed.
+    """
+    return text.select(
+        F.col("_metadata.file_name").alias("file_name"),
+        F.col("_metadata.file_size").alias("file_size"),
+        F.col("_metadata.file_modification_time").alias("time_created"),
+        F.col("value").alias("line"),
+        # bucket_name := parent directory (object-store bucket stand-in)
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -2).alias("bucket_name"),
+    )
+
+
 def read_csv_file_metadata(spark: SparkSession, path: str) -> DataFrame:
-    """File-granularity metadata view: one row per CSV file.
+    """Batch per-line view of a bucket directory (see `file_lines`).
 
-    Columns mirror the triple the reference fetches per blob
-    (main.py:43-47): (bucket_name, file_name, file_size, time_created).
-    Uses Spark's `_metadata` hidden column on a text scan — the file is
-    listed, not parsed, and content is read once line-wise for counting
-    downstream.
+    Spark's file scans skip zero-length files, so each one is added as a
+    single row with `file_size` 0 and a null `line`, found by one
+    `os.scandir` pass: a local-FS listing, like `read_ledger`'s glob.
     """
-    df = (
-        spark.read.format("text")
-        .load(path)
-        .select(
-            F.col("_metadata.file_path").alias("full_path"),
-            F.col("_metadata.file_name").alias("file_name"),
-            F.col("_metadata.file_size").alias("file_size"),
-            F.col("_metadata.file_modification_time").alias("time_created"),
-            F.col("value").alias("line"),
+    lines = file_lines(spark.read.format("text").load(path))
+    # the names Spark's file index lists: no `.`- or `_`-prefixed files
+    empty = [
+        e
+        for e in (os.scandir(path) if os.path.isdir(path) else ())
+        if e.is_file() and e.name[0] not in "._" and e.stat().st_size == 0
+    ]
+    if not empty:
+        return lines
+    # bucket_name from the directory in `_metadata.file_path`'s URI form
+    uri = spark._jvm.org.apache.hadoop.fs.Path(os.path.abspath(path)).toUri().toString()
+    # from an Arrow table createDataFrame plans a LocalRelation, which adds
+    # no tasks to the scan stage (a Python list becomes an RDD)
+    zero = spark.createDataFrame(
+        pa.table(
+            {
+                "file_name": [e.name for e in empty],
+                "mtime_ms": [e.stat().st_mtime_ns // 1_000_000 for e in empty],
+            }
         )
+    ).select(
+        "file_name",
+        F.lit(0).cast("long").alias("file_size"),
+        F.timestamp_millis("mtime_ms").alias("time_created"),
+        F.lit(None).cast("string").alias("line"),
+        F.lit(uri.rsplit("/", 1)[-1]).alias("bucket_name"),
     )
-    # bucket_name := parent directory (object-store bucket stand-in)
-    return df.withColumn(
-        "bucket_name",
-        F.element_at(F.split(F.col("full_path"), "/"), -2),
-    )
-
-
-def read_csv_stream(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    max_files_per_trigger: int = 100,
-) -> DataFrame:
-    """Structured Streaming file source — the event-driven trigger.
-
-    `maxFilesPerTrigger` is the admission-control knob standing in for
-    the reference's per-event function invocation (ARCHITECTURE.md:153-158).
-    """
-    return (
-        spark.readStream.format("csv")
-        .schema(schema)
-        .option("header", "true")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .load(path)
-    )
+    return lines.unionByName(zero)

@@ -3,8 +3,7 @@ training corpora (one JSON document per line).
 
 Mirrors the CSV source's posture: explicit schema, PERMISSIVE parse
 with corrupt-record capture (malformed lines become data feeding a
-`failed`/quarantine path, never exceptions), partitioned scans, and a
-streaming twin for continuously-landing shards.
+`failed`/quarantine path, never exceptions) and partitioned scans.
 """
 
 from __future__ import annotations
@@ -60,16 +59,3 @@ def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     return good, bad
 
-
-def read_jsonl_stream(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType = DOCUMENT_JSONL_SCHEMA,
-    max_files_per_trigger: int = 100,
-) -> DataFrame:
-    """Streaming twin: continuously-landing JSONL shards."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .json(path)
-    )

@@ -17,84 +17,35 @@ semantics (SURVEY §3.2).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
-from ..functions.keys import upload_id_col
-from ..operators.ledger import read_ledger, upsert_append
-from ..operators.ingest import MIN_DATA_ROWS, terminal_upload_ids
+from ..operators.ingest import ingest_lines
+from ..sources.csv_source import file_lines
 
-
-def _process_batch(spark: SparkSession, batch: DataFrame, ledger_dir: str) -> None:
-    """Per-micro-batch ingest: same dataflow as operators.ingest, driven
-    from the streaming file source's per-line rows."""
-    per_file = (
-        batch.filter(F.lower(F.col("file_name")).endswith(".csv"))
-        .groupBy("bucket_name", "file_name", "file_size", "time_created")
-        .agg(F.count("*").alias("n_lines"))
-        .withColumn(
-            "upload_id",
-            upload_id_col("bucket_name", "file_name", "file_size", "time_created"),
-        )
-        .withColumn("data_rows", F.greatest(F.col("n_lines") - 1, F.lit(0)))
-    )
-    # same gate as the batch path: skip `done` (F2) AND retry-exhausted
-    # uploads (E2 DLQ cap) — without the exhausted side, a permanently
-    # failing file would append a `failed` row on every query lifetime
-    # that re-lists it, violating the reference's 5-attempt policy.
-    skip = terminal_upload_ids(read_ledger(spark, ledger_dir))
-    fresh = per_file.join(F.broadcast(skip), "upload_id", "left_anti")
-    ok = F.col("data_rows") >= MIN_DATA_ROWS
-    now = F.current_timestamp()
-    transitions = fresh.select(
-        "upload_id",
-        "bucket_name",
-        "file_name",
-        "file_size",
-        F.when(ok, F.lit("done")).otherwise(F.lit("failed")).alias("status"),
-        now.alias("queued_at"),
-        now.alias("processing_started_at"),
-        F.when(ok, now).alias("processing_completed_at"),
-        F.when(~ok, now).alias("failed_at"),
-        F.when(
-            ~ok, F.concat(F.lit("CSV file has no data rows: "), F.col("file_name"))
-        ).alias("error_message"),
-        F.when(ok, F.col("n_lines")).alias("lines_processed"),
-        now.alias("ts"),
-    )
-    upsert_append(transitions, ledger_dir)
+# files admitted per micro-batch
+MAX_FILES_PER_TRIGGER = 100
 
 
-def start_ingest_stream(
-    spark: SparkSession,
-    csv_dir: str,
-    ledger_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 100,
-):
+def start_ingest_stream(spark: SparkSession, csv_dir: str, ledger_dir: str, checkpoint_dir: str):
     """Start the event-driven ingest query; returns the StreamingQuery.
 
-    Reads line-wise with the text source + `_metadata` so per-file
-    identity (name/size/mtime) travels with every line — the streaming
-    twin of sources.csv_source.read_csv_file_metadata.
-    """
-    lines = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .load(csv_dir)
-        .select(
-            F.col("_metadata.file_path").alias("full_path"),
-            F.col("_metadata.file_name").alias("file_name"),
-            F.col("_metadata.file_size").alias("file_size"),
-            F.col("_metadata.file_modification_time").alias("time_created"),
-            F.col("value").alias("line"),
-        )
-        .withColumn("bucket_name", F.element_at(F.split(F.col("full_path"), "/"), -2))
-    )
+    Each micro-batch's per-line rows (`file_lines` over the streaming
+    text source) go through `operators.ingest.ingest_lines`, the batch
+    path's own facts → gate → transitions → append code.
 
+    Known gap: the stream cannot see 0-byte files. The file source skips
+    them, and a `foreachBatch` frame's `inputFiles()` is empty, so a
+    micro-batch cannot tell which 0-byte files arrived with it; the batch
+    path's directory listing has no per-batch equivalent here.
+    """
+    lines = file_lines(
+        spark.readStream.format("text")
+        .option("maxFilesPerTrigger", str(MAX_FILES_PER_TRIGGER))
+        .load(csv_dir)
+    )
     return (
         lines.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(lambda batch, _id: _process_batch(spark, batch, ledger_dir))
+        .foreachBatch(lambda batch, _id: ingest_lines(batch, ledger_dir))
         .start()
     )

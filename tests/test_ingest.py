@@ -150,6 +150,37 @@ def test_empty_file_divergence_from_reference_is_pinned(spark, tmp_path):
     assert raw_split_count == 2  # what main.py:121-123 would count
 
 
+def test_zero_byte_csv_fails_on_every_delivery(spark, tmp_path):
+    """Spark's file scans skip zero-length files; the batch source lists
+    them itself, so a 0-byte .csv gets a `failed` row per delivery, keyed
+    like any other file. The reference fails it too: content.split('\\n')
+    gives 1 entry, below its 2-line minimum (main.py:121-127)."""
+    import hashlib
+    import os
+
+    d = tmp_path / "bucket-z"
+    d.mkdir()
+    (d / "zero.csv").write_bytes(b"")
+    (d / "zero.txt").write_bytes(b"")  # non-.csv: still filtered out
+    os.utime(d / "zero.csv", (1_767_225_600, 1_767_225_600))
+    ledger_dir = str(tmp_path / "ledger")
+
+    (row,) = ingest_batch(spark, str(d), ledger_dir).collect()
+    assert row["file_name"] == "zero.csv"
+    assert row["status"] == "failed"
+    assert row["error_message"] == "CSV file has no data rows: zero.csv"
+    assert row["lines_processed"] is None
+    assert row["file_size"] == 0
+    key = b"bucket-z-zero.csv-0-2026-01-01T00:00:00"
+    assert row["upload_id"] == hashlib.sha256(key).hexdigest()[:16]
+
+    # a redelivery below the retry cap appends a second `failed` row
+    ingest_batch(spark, str(d), ledger_dir)
+    rows = read_ledger(spark, ledger_dir).collect()
+    assert [r["status"] for r in rows] == ["failed", "failed"]
+    assert {r["upload_id"] for r in rows} == {row["upload_id"]}
+
+
 def test_read_csv_dir_typed_with_corrupt_capture(spark, tmp_path):
     """sources.read_csv_dir: typed PERMISSIVE scan turns malformed rows
     into data (_corrupt_record) instead of job failure — the engine's

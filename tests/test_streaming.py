@@ -91,3 +91,76 @@ def test_stream_retry_cap_stops_permanent_failures(spark, tmp_path):
             .count()
         )
         assert n_failed == min(attempt + 1, MAX_DELIVERY_ATTEMPTS)
+
+
+def _ledger_rows(spark, ledger_dir):
+    return sorted(
+        (r["file_name"], r["status"], r["lines_processed"], r["error_message"])
+        for r in read_ledger(spark, ledger_dir).collect()
+    )
+
+
+def _parity_dir(tmp_path):
+    d = tmp_path / "bucket-p"
+    d.mkdir()
+    (d / "good.csv").write_text(GOOD)
+    (d / "header-only.csv").write_text(BAD)
+    (d / "blank.csv").write_text("\n")
+    (d / "decoy.txt").write_text(GOOD)
+    return str(d)
+
+
+def test_stream_and_batch_write_the_same_rows(spark, tmp_path):
+    """Batch and stream share one write path, so over the same directory
+    they append the same (file_name, status, lines_processed,
+    error_message) rows."""
+    from csv_data_ingestion_pipeline_with_idempotency_on_google_cloud_platform_spark.operators import (
+        ingest_batch,
+    )
+
+    csv_dir = _parity_dir(tmp_path)
+    batch_ledger = str(tmp_path / "batch-ledger")
+    stream_ledger = str(tmp_path / "stream-ledger")
+    ingest_batch(spark, csv_dir, batch_ledger)
+    q = start_ingest_stream(spark, csv_dir, stream_ledger, str(tmp_path / "ckpt"))
+    try:
+        _wait_idle(q)
+    finally:
+        q.stop()
+
+    rows = _ledger_rows(spark, batch_ledger)
+    assert [r[:3] for r in rows] == [
+        ("blank.csv", "failed", None),
+        ("good.csv", "done", 3),
+        ("header-only.csv", "failed", None),
+    ]
+    assert _ledger_rows(spark, stream_ledger) == rows
+
+
+def test_batch_and_stream_append_through_the_ingest_hook(spark, tmp_path, monkeypatch):
+    """Both paths write via `operators.ingest.upsert_append`, looked up
+    at call time, so patching that one module global sees every append."""
+    from csv_data_ingestion_pipeline_with_idempotency_on_google_cloud_platform_spark.operators import (
+        ingest as ingest_mod,
+    )
+
+    calls = []
+    real = ingest_mod.upsert_append
+
+    def spy(transitions, ledger_dir):
+        calls.append(ledger_dir)
+        real(transitions, ledger_dir)
+
+    monkeypatch.setattr(ingest_mod, "upsert_append", spy)
+    csv_dir = _parity_dir(tmp_path)
+    batch_ledger = str(tmp_path / "batch-ledger")
+    ingest_mod.ingest_batch(spark, csv_dir, batch_ledger)
+    assert calls == [batch_ledger]
+
+    stream_ledger = str(tmp_path / "stream-ledger")
+    q = start_ingest_stream(spark, csv_dir, stream_ledger, str(tmp_path / "ckpt"))
+    try:
+        _wait_idle(q)
+    finally:
+        q.stop()
+    assert calls == [batch_ledger, stream_ledger]
